@@ -29,7 +29,9 @@ instead).
 
 from __future__ import annotations
 
+import functools
 import json
+import logging
 import os
 import threading
 from typing import Any, NamedTuple
@@ -100,6 +102,23 @@ def _type_name(dt: T.DataType) -> str:
     return _CANONICAL.get(s, s)
 
 
+def _quote(name: str) -> str:
+    """A column name as a backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+# a buffered row's dt partition value, as the flush path derives it
+_BUFFER_DT = "date_format(`timestamp`, 'yyyy-MM-dd') AS dt"
+
+
+@functools.lru_cache(maxsize=None)
+def _sql_type(t: str) -> str:
+    """Generation-schema type name → the type text CAST and a DDL
+    schema take (an unparseable name reads as string, as in
+    :func:`_parse_type`)."""
+    return _parse_type(t).simpleString()
+
+
 _DT_DIR_RE = __import__("re").compile(r"^\d{4}-\d{2}-\d{2}$")
 
 
@@ -128,10 +147,6 @@ def _filter_listing_by_day(listing, ts_range):
     return out
 
 
-_TS_LIT_RE = __import__("re").compile(
-    r"^\d{4}-\d{2}-\d{2}(?:[ T]\d{2}:\d{2}(?::\d{2}(?:\.\d{1,6})?)?)?$")
-
-
 def _advisory_bytes(spark) -> int:
     """AQE advisory partition size in bytes (the threshold under which
     a rebalance would coalesce a flush batch to one task anyway — see
@@ -150,32 +165,6 @@ def _advisory_bytes(spark) -> int:
         return int(float(s) * mult)
     except ValueError:
         return 64 * 1024 * 1024
-
-
-def _parse_ts_literal(lit: str | None):
-    """A quoted SQL literal as a tz-naive datetime, or None when typed
-    timestamp semantics can't be guaranteed — the decline-on-doubt gate
-    for zone-map timestamp pruning. Rejects tz-aware forms (the engine
-    stores naive-UTC brackets under session timeZone=UTC; an offset
-    literal would need tz arithmetic the string bracket can't express).
-
-    The shape gate (_TS_LIT_RE) admits only the dashed forms whose
-    Spark string→timestamp cast provably agrees with
-    ``datetime.fromisoformat``: ``YYYY-MM-DD`` optionally followed by
-    ``[ T]HH:MM[:SS[.ffffff]]``. Python ≥3.11 fromisoformat also takes
-    compact forms Spark casts to NULL (``'20240101'``,
-    ``'2024-01-01T10'``) — those must decline HERE so the documented
-    invariant ("a declined parse only skips an optimization") holds
-    without leaning on the outer SQL's re-filter (r14 ADVICE, low)."""
-    if lit is None or not _TS_LIT_RE.match(lit):
-        return None
-    import datetime as _dt
-
-    try:
-        parsed = _dt.datetime.fromisoformat(lit)
-    except (ValueError, TypeError):
-        return None
-    return None if parsed.tzinfo is not None else parsed
 
 
 class Engine:
@@ -284,6 +273,7 @@ class Engine:
             "count": 0, "total_ms": 0.0, "slow": [], "truncated": 0
         }
         self._buffers: dict[str, WriteBuffer] = {}
+        self._nul_split = None  # JVM Pattern behind _jstrings
         # known-files cache per (table, gen): the set of data files
         # already present before the next append commit. Lets the
         # commit's add-file delta be computed with ONE post-write LIST
@@ -755,16 +745,6 @@ class Engine:
     # read path
     # ------------------------------------------------------------------
 
-    def _catalog_struct(self, table: str) -> T.StructType | None:
-        cols = self.catalog.schema_of(table)
-        if not cols:
-            return None
-        fields = [
-            T.StructField(name, _parse_type(typ), True)
-            for name, typ in cols.items()
-        ]
-        return T.StructType(fields)
-
     def index_source(self, table: str):
         """Staleness-contract handle for derived serving indexes built
         from ``table`` (see :mod:`miniodb_spark.serving`): pass it as
@@ -783,47 +763,112 @@ class Engine:
         the overwhelmingly common case — stay a single plain scan with
         full partition pruning on ``dt``; ``gen`` is synthesized as a
         literal so mutations can address physical partitions."""
+        return self._read_current(table, buffer=False)
+
+    def _read_current(self, table: str, buffer: bool) -> DataFrame | None:
+        """Every generation of the current catalog, whole directories,
+        optionally with the write buffer."""
         gens = self.catalog.gen_schemas(table)
-        cum = self.catalog.schema_of(table)
-        if not gens or not cum:
-            return None
-        excluded = self.catalog.excluded_parts(table)
-        parts: list[DataFrame] = []
-        for i, gcols in enumerate(gens):
-            if not gcols:
-                continue  # tombstoned by collapse_generations: no stat
-            gdir = self._gen_dir(table, i)
-            if not self.fs.is_dir(gdir):
-                continue
-            struct = T.StructType(
-                [
-                    T.StructField(c, _parse_type(t), True)
-                    for c, t in gcols.items()
-                ]
-                + [T.StructField("dt", T.StringType(), True)]
+        files = {
+            i: None for i, gcols in enumerate(gens)
+            # tombstoned by collapse_generations: no stat
+            if gcols and self.fs.is_dir(self._gen_dir(table, i))
+        }
+        return self._build_read(
+            table, gens, self.catalog.schema_of(table), files,
+            buffer=buffer)
+
+    def _build_read(
+        self, table: str, gens: list[dict[str, str]], cum: dict[str, str],
+        files: dict[int, list[str] | None], pred=None,
+        required: tuple[str, ...] = (), buffer: bool = False,
+    ) -> DataFrame | None:
+        """The one read builder behind read_persisted, read_table,
+        read_snapshot and the zone-map lookups.
+
+        ``files`` maps a generation index to the data files to open, or
+        to None for its whole directory minus the partitions a
+        committed rewrite excluded. Each generation is one
+        explicit-schema scan with ONE ``selectExpr`` onto the output
+        schema: cumulative columns CAST to their type (NULL where the
+        generation lacks them), ``dt``, and the generation index as
+        ``gen``. With ``buffer`` the unflushed rows union in, projected
+        the same way; where buffer and cumulative types disagree both
+        sides take the widened merge type (long+double → double, else
+        string), so the union never clashes and never truncates. Every
+        CAST is computed here from the catalog and the buffer's
+        inferred batch schema, so no ``.schema`` round trip is needed.
+
+        ``pred`` re-filters the union (a pruned scan's residual); a
+        buffer lacking any ``required`` column holds only NULLs there,
+        so none of its rows is kept. None when there is nothing to
+        read."""
+        buf = self._buffer_frame(table) if buffer else None
+        types = dict(cum)
+        extra: list[str] = []
+        for c, t in (buf[1] if buf else {}).items():
+            if c in cum:
+                types[c] = merge_type(cum[c], t)
+            else:
+                types[c] = t
+                extra.append(c)
+
+        def project(df, present, dt, gen):
+            def cast(c):
+                src = _quote(c) if c in present else "NULL"
+                return f"CAST({src} AS {_sql_type(types[c])}) AS {_quote(c)}"
+
+            exprs = (
+                [*map(cast, cum), dt, f"{gen} AS gen", *map(cast, extra)]
+                if cum else [*map(cast, extra), dt]
             )
-            df = self.spark.read.schema(struct).parquet(gdir)
-            # partitions superseded by a committed-but-not-yet-GC'd
-            # rewrite: dt is a partition column, so this prunes at
-            # planning time rather than filtering rows
-            dts = sorted(d for g, d in excluded if g == i)
-            if dts:
-                df = df.filter(~F.col("dt").isin(dts))
-            cols = [
-                (
-                    F.col(c).cast(_parse_type(ct))
-                    if c in gcols
-                    else F.lit(None).cast(_parse_type(ct))
-                ).alias(c)
-                for c, ct in cum.items()
-            ]
-            parts.append(df.select(*cols, F.col("dt"), F.lit(i).alias("gen")))
-        if not parts:
+            return DataFrame(
+                df._jdf.selectExpr(self._jstrings(exprs)), self.spark)
+
+        excluded = (
+            self.catalog.excluded_parts(table)
+            if None in files.values() else []
+        )
+        frames = []
+        for i, paths in files.items():
+            gdir = self._gen_dir(table, i)
+            reader = self.spark.read.schema(", ".join(
+                f"{_quote(c)} {_sql_type(t)}"
+                for c, t in {**gens[i], "dt": "string"}.items()))
+            if paths is None:
+                df = reader.parquet(gdir)
+                # partitions superseded by a committed-but-not-yet-GC'd
+                # rewrite: dt is a partition column, so this prunes at
+                # planning time rather than filtering rows
+                dts = sorted(d for g, d in excluded if g == i)
+                if dts:
+                    df = df.filter("dt NOT IN ({})".format(", ".join(
+                        "'" + d.replace("\\", "\\\\").replace("'", "\\'")
+                        + "'" for d in dts)))
+            else:
+                df = reader.option("basePath", gdir).parquet(*paths)
+            frames.append(project(df, gens[i], "`dt`", i))
+        if buf:
+            df = project(buf[0], buf[1], _BUFFER_DT, "CAST(NULL AS INT)")
+            # kept for its columns even when it can hold no match
+            frames.append(df if all(c in buf[1] for c in required)
+                          else df.filter("false"))
+        if not frames:
             return None
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        out = frames[0]
+        for f in frames[1:]:
+            out = out.union(f)
+        return out if pred is None else out.filter(pred)
+
+    def _jstrings(self, items: list[str]):
+        """``items`` as one Java ``String[]`` in one py4j round trip:
+        py4j ships a Python list one element per round trip, which made
+        each projection cost O(columns) calls. Joined on NUL and split
+        in the JVM, so a column name holding a NUL is unsupported."""
+        if self._nul_split is None:
+            self._nul_split = (
+                self.spark._jvm.java.util.regex.Pattern.compile("\x00"))
+        return self._nul_split.split("\x00".join(items))
 
     # -- time travel ------------------------------------------------------
 
@@ -894,7 +939,7 @@ class Engine:
         # watermark below.
         add_idx = self.catalog.added_files_index(table)
         rm_idx = self.catalog.removed_files_index(table)
-        parts: list[DataFrame] = []
+        scans: dict[int, list[str]] = {}
         for i, gcols in enumerate(gens):
             if not gcols:
                 continue
@@ -980,62 +1025,8 @@ class Engine:
             if lost:
                 missing.append((i, sorted(lost)[0]))
                 continue
-            if not files:
-                continue
-            struct = T.StructType(
-                [
-                    T.StructField(c, _parse_type(t), True)
-                    for c, t in gcols.items()
-                ]
-                + [T.StructField("dt", T.StringType(), True)]
-            )
-            try:
-                df = (
-                    self.spark.read.schema(struct)
-                    .option("basePath", gdir)
-                    .parquet(*files)
-                )
-            except AnalysisException as e:
-                # TOCTOU (r16, storm-found): a file that passed the
-                # membership check above can be retention-dropped /
-                # vacuumed by ANOTHER driver before this eager path
-                # resolution — surface it as the one retryable
-                # refusal type the snapshot contract documents, not a
-                # raw PATH_NOT_FOUND. (A deletion after this point
-                # still fails loudly at action time via Spark's own
-                # missing-file error; laziness puts that beyond this
-                # method's reach. Retry at a re-refreshed version is
-                # the protocol either way.)
-                # r17 (r16 ADVICE): only MISSING-PATH conditions map to
-                # the retryable type — a corrupt footer / permission /
-                # schema AnalysisException is not transient, and
-                # labeling it "vanished mid-read" sends the storm
-                # reader's retry loop into futile spins over a real
-                # fault. Spark 4 raises PATH_NOT_FOUND for this case
-                # (error class) with FileNotFoundException underneath.
-                klass = ""
-                try:
-                    klass = e.getCondition() or ""
-                except Exception:
-                    pass
-                msg = str(e)
-                if not ("PATH_NOT_FOUND" in klass
-                        or "PATH_NOT_FOUND" in msg
-                        or "FileNotFoundException" in msg):
-                    raise
-                raise SnapshotUnavailableError(
-                    f"snapshot v{version} of {table!r}: a listed file "
-                    f"vanished mid-read (concurrent retention/vacuum): "
-                    f"{e}") from e
-            cols = [
-                (
-                    F.col(c).cast(_parse_type(ct))
-                    if c in gcols
-                    else F.lit(None).cast(_parse_type(ct))
-                ).alias(c)
-                for c, ct in cum.items()
-            ]
-            parts.append(df.select(*cols, F.col("dt"), F.lit(i).alias("gen")))
+            if files:
+                scans[i] = files
         if missing:
             raise SnapshotUnavailableError(
                 f"snapshot v{version} of {table!r} needs partitions/"
@@ -1045,12 +1036,40 @@ class Engine:
                 "with retain_history=True — which also defers "
                 "compaction — and vacuum explicitly to keep snapshots "
                 "readable")
-        if not parts:
-            return None
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        try:
+            return self._build_read(table, gens, cum, scans)
+        except AnalysisException as e:
+            # TOCTOU (r16, storm-found): a file that passed the
+            # membership check above can be retention-dropped /
+            # vacuumed by ANOTHER driver before this eager path
+            # resolution — surface it as the one retryable
+            # refusal type the snapshot contract documents, not a
+            # raw PATH_NOT_FOUND. (A deletion after this point
+            # still fails loudly at action time via Spark's own
+            # missing-file error; laziness puts that beyond this
+            # method's reach. Retry at a re-refreshed version is
+            # the protocol either way.)
+            # r17 (r16 ADVICE): only MISSING-PATH conditions map to
+            # the retryable type — a corrupt footer / permission /
+            # schema AnalysisException is not transient, and
+            # labeling it "vanished mid-read" sends the storm
+            # reader's retry loop into futile spins over a real
+            # fault. Spark 4 raises PATH_NOT_FOUND for this case
+            # (error class) with FileNotFoundException underneath.
+            klass = ""
+            try:
+                klass = e.getCondition() or ""
+            except Exception:
+                pass
+            msg = str(e)
+            if not ("PATH_NOT_FOUND" in klass
+                    or "PATH_NOT_FOUND" in msg
+                    or "FileNotFoundException" in msg):
+                raise
+            raise SnapshotUnavailableError(
+                f"snapshot v{version} of {table!r}: a listed file "
+                f"vanished mid-read (concurrent retention/vacuum): "
+                f"{e}") from e
 
     def vacuum(self, table: str) -> int:
         """Physically remove partitions superseded by committed rewrites
@@ -1073,64 +1092,29 @@ class Engine:
     def read_buffer(self, table: str) -> DataFrame | None:
         """Unflushed rows as a DataFrame — the hybrid-query half that gives
         1–3 s visibility (reference query/query.go:399-427)."""
-        buf = self._buffers.get(table)
+        buf = self._buffer_frame(table)
         if buf is None:
             return None
-        rows = buf.rows_for(table)
+        return buf[0].selectExpr("*", _BUFFER_DT)
+
+    def _buffer_frame(self, table: str) -> tuple[DataFrame, dict[str, str]] | None:
+        """Unflushed rows (no ``dt``) plus their inferred column types."""
+        buf = self._buffers.get(table)
+        rows = buf.rows_for(table) if buf is not None else None
         if not rows:
             return None
         row_dicts = [r.to_dict() for r in rows]
         batch_schema, name_map = dyn_schema.infer_batch_schema(row_dicts)
         df = dyn_schema.batch_dataframe(
             self.spark, row_dicts, batch_schema, name_map)
-        return df.withColumn("dt", F.date_format("timestamp", "yyyy-MM-dd"))
+        return df, {f.name: _type_name(f.dataType) for f in batch_schema.fields}
 
     def read_table(self, table: str) -> DataFrame | None:
-        """Hybrid read: persisted ∪ buffer (allowMissingColumns covers
-        ragged dynamic schemas). Where buffer and cumulative types
-        disagree, *both* sides are cast to the widened merge type
+        """Hybrid read: persisted ∪ buffer. Where buffer and cumulative
+        types disagree, *both* sides are cast to the widened merge type
         (long+double → double, else string) so the union never clashes
-        and never truncates."""
-        persisted = self.read_persisted(table)
-        buffered = self.read_buffer(table)
-        persisted, buffered = self._harmonize_hybrid(table, persisted, buffered)
-        if persisted is None:
-            return buffered
-        if buffered is None:
-            return persisted
-        return persisted.unionByName(buffered, allowMissingColumns=True)
-
-    def _harmonize_hybrid(self, table, persisted, buffered):
-        """Cast persisted/buffer sides to their widened merge types so a
-        hybrid union never clashes and never truncates (shared by
-        read_table and point_lookup_df)."""
-        from .catalog import merge_type
-
-        if buffered is not None and persisted is not None:
-            cum = self.catalog.schema_of(table)
-            buf_types = {f.name: _type_name(f.dataType) for f in buffered.schema.fields}
-            target = {
-                c: merge_type(cum[c], t) if c in cum else t
-                for c, t in buf_types.items()
-                if c not in ("dt",)
-            }
-            buffered = buffered.select(
-                *[
-                    F.col(f.name).cast(_TYPE_MAP.get(target.get(f.name, ""), f.dataType)).alias(f.name)
-                    if f.name in target
-                    else F.col(f.name)
-                    for f in buffered.schema.fields
-                ]
-            )
-            persisted = persisted.select(
-                *[
-                    F.col(f.name).cast(_TYPE_MAP.get(target.get(f.name, ""), f.dataType)).alias(f.name)
-                    if f.name in target and f.name in cum
-                    else F.col(f.name)
-                    for f in persisted.schema.fields
-                ]
-            )
-        return persisted, buffered
+        and never truncates; columns one side lacks read NULL."""
+        return self._read_current(table, buffer=True)
 
     # ------------------------------------------------------------------
     # point lookups (zone-map file skipping)
@@ -1186,8 +1170,6 @@ class Engine:
         except Exception as exc:
             self.zonemap_build_errors += 1
             self.zonemap_last_error = f"{table}/gen={gen}: {exc!r}"
-            import logging
-
             logging.getLogger(__name__).warning(
                 "zone-map build failed for %s gen=%d (lookups fall back "
                 "to full-generation scans): %r", table, gen, exc,
@@ -1333,11 +1315,11 @@ class Engine:
     def _pruned_hybrid_scan(
         self, table: str, id_col, select_fn, key_pred,
     ) -> tuple[DataFrame | None, dict]:
-        """Shared scan builder behind point/range lookups: per
-        generation, ``select_fn(gen, listing)`` picks the files to
-        open (a superset of matches by the zone-map contract), the
-        residual ``key_pred`` re-filters rows, and the in-memory
-        buffer unions in exactly like read_table. ``id_col`` may be a
+        """File selection behind point/range lookups: per generation,
+        ``select_fn(gen, listing)`` picks the files to open (a superset
+        of matches by the zone-map contract); :meth:`_build_read` scans
+        them, unions the buffer in exactly like read_table and
+        re-filters by the residual ``key_pred``. ``id_col`` may be a
         tuple of columns (multi-column range lookups): a generation or
         buffer lacking ANY of them holds only NULLs there, which no
         equality/range predicate matches — skipped wholesale."""
@@ -1345,10 +1327,9 @@ class Engine:
         from .zonemap import list_generation_files
 
         gens = self.catalog.gen_schemas(table)
-        cum = self.catalog.schema_of(table)
         report = {"files_total": 0, "files_scanned": 0,
                   "files_skipped": 0, "gens": len(gens)}
-        parts: list[DataFrame] = []
+        files: dict[int, list[str]] = {}
         excluded = self.catalog.excluded_parts(table)
         for i, gcols in enumerate(gens):
             if not gcols:
@@ -1372,45 +1353,12 @@ class Engine:
                 sel, skipped = [], len(listing)  # column absent: no match
             report["files_scanned"] += len(sel)
             report["files_skipped"] += skipped
-            if not sel:
-                continue
-            struct = self._gen_struct(table, i)
-            df = (
-                self.spark.read.option("basePath", gdir)
-                .schema(struct)
-                .parquet(*[fsmod.join(gdir, rel) for rel in sel])
-            )
-            cols = [
-                (
-                    F.col(c).cast(_parse_type(ct))
-                    if c in gcols
-                    else F.lit(None).cast(_parse_type(ct))
-                ).alias(c)
-                for c, ct in cum.items()
-            ]
-            parts.append(df.select(*cols, F.col("dt"), F.lit(i).alias("gen")))
-        persisted = None
-        if parts:
-            persisted = parts[0]
-            for p in parts[1:]:
-                persisted = persisted.unionByName(p)
-            persisted = persisted.filter(key_pred)
-        buffered = self.read_buffer(table)
-        if buffered is not None and all(
-            c in buffered.columns for c in req
-        ):
-            buffered = buffered.filter(key_pred)
-        elif buffered is not None:
-            buffered = None
-        persisted, buffered = self._harmonize_hybrid(table, persisted, buffered)
-        if persisted is None:
-            return buffered, report
-        if buffered is None:
-            return persisted, report
-        return (
-            persisted.unionByName(buffered, allowMissingColumns=True),
-            report,
-        )
+            if sel:
+                files[i] = [fsmod.join(gdir, rel) for rel in sel]
+        df = self._build_read(
+            table, gens, self.catalog.schema_of(table), files,
+            pred=key_pred, required=req, buffer=True)
+        return df, report
 
     def point_lookup_full(
         self, table: str, value, id_col: str = "id"
@@ -1503,156 +1451,65 @@ class Engine:
                             f"before ts_us={as_of_ts_us}")
                 df = self.read_snapshot(t, v)
             else:
-                df = self.read_table(t)
-                # zone-map file pruning on the SQL path: when the WHERE
-                # clause provably pins id = 'v' conjunctively (see
-                # gate.extract_conjunctive_eq for the soundness rules),
-                # swap the full hybrid scan for the pruned one — the
-                # SQL still re-applies every predicate, the pruned set
-                # is a superset of matching rows by construction, and
-                # any failure falls back to the full scan. This is the
-                # reference's Redis-min/max query-path pruning
-                # (BASELINE.md: file pruning −90% reads) on Spark.
-                # a self-join (FROM t a JOIN t b ...) references the
-                # view twice but the id conjunct constrains only ONE
-                # alias — pruning the shared view would drop the other
-                # alias's rows. Conservative: the table name must occur
-                # exactly once in the literal-stripped SQL (column
-                # prefixes over-count, which only declines the
-                # optimization, never breaks correctness).
-                import re as _re
-
-                single_ref = (
-                    len(tables) == 1
-                    and len(_re.findall(
-                        rf"\b{_re.escape(t)}\b",
-                        gate._strip_string_literals(sql))) == 1
-                )
-                # MULTI-table (r14 verdict #8): a plain single-SELECT
-                # join where only one side has the conjunct is
-                # provably prunable — but only with QUALIFIED
-                # attribution (alias.col / table.col; an unqualified
-                # `id` is ambiguous across the join) and only when
-                # the single WHERE is provably the outer filter. See
-                # gate.extract_join_pruning_bindings for the full
-                # soundness argument (covers LEFT/FULL null-extension).
-                qual: tuple[str, ...] | None = None
-                eligible = single_ref
-                if not eligible and len(tables) > 1:
-                    binds = gate.extract_join_pruning_bindings(sql)
-                    if binds is not None and t in binds:
-                        qual, eligible = binds[t], True
-                if df is not None and eligible:
-                    key = gate.extract_conjunctive_keys(
-                        sql, qualifier=qual)
-                    # timestamp range with TYPED comparison: the
-                    # quoted literal must parse as a (tz-naive) ISO
-                    # timestamp, else decline — a string bracket must
-                    # never be compared against a non-timestamp
-                    # literal (r13 verdict #5). The window composes
-                    # with BOTH key lookups ("these ids, last week")
-                    # and id ranges (keyset cursor inside a window).
-                    ts_parsed: tuple | None = None
-                    ts_rng = gate.extract_conjunctive_range(
-                        sql, column="timestamp",
-                        typed_literal_prefixes=("TIMESTAMP",),
-                        qualifier=qual)
-                    if ts_rng is not None:
-                        lo, lo_i, hi, hi_i = ts_rng
-                        plo = _parse_ts_literal(lo)
-                        phi = _parse_ts_literal(hi)
-                        if (lo is None) == (plo is None) and \
-                                (hi is None) == (phi is None):
-                            ts_parsed = (plo, lo_i, phi, hi_i)
-                    ranges: dict[str, tuple] = {}
-                    if key is None:
-                        # typed prefixes here too: without them a
-                        # coexisting `timestamp BETWEEN TIMESTAMP '..'
-                        # AND TIMESTAMP '..'` stays unrewritten and its
-                        # embedded AND makes the splitter decline the
-                        # WHOLE clause, losing the provable id range
-                        # (r14 ADVICE, low). _rewrite_between is
-                        # extraction-only and column-agnostic, so this
-                        # cannot affect id soundness.
-                        id_rng = gate.extract_conjunctive_range(
-                            sql, typed_literal_prefixes=("TIMESTAMP",),
-                            qualifier=qual)
-                        if id_rng is not None:
-                            ranges["id"] = id_rng
-                        if ts_parsed is not None:
-                            ranges["timestamp"] = ts_parsed
-                        # numeric-literal conjuncts on the table's
-                        # EXTRA indexed columns (TableConfig.
-                        # zonemap_columns) — the reference's numeric
-                        # min/max pruning (file_pruning.go:107-255).
-                        # Typed int/float bounds; the pruner admits
-                        # any non-comparable bracket (TypeError ⇒
-                        # scan), so a mis-typed column only loses the
-                        # optimization.
-                        for zc in self._zonemap_cols_for(t):
-                            if zc in ("id", "timestamp"):
-                                continue
-                            nrng = gate.extract_conjunctive_numeric_range(
-                                sql, column=zc, qualifier=qual)
-                            if nrng is None and (
-                                self.catalog.schema_of(t) or {}
-                            ).get(zc) == "string":
-                                # quoted-literal ranges on an extra
-                                # column prune exactly like the id
-                                # path — but ONLY when the cumulative
-                                # type is string, so the SQL compares
-                                # strings binarily (any non-string
-                                # type would CAST the literal, and a
-                                # lexicographic bracket check against
-                                # e.g. '2024-1-2' on a timestamp
-                                # column is an unsound skip).
-                                # Generations whose physical type
-                                # differs hold non-string brackets:
-                                # those TypeError into a scan.
-                                nrng = gate.extract_conjunctive_range(
-                                    sql, column=zc, qualifier=qual)
-                            if nrng is not None:
-                                ranges[zc] = nrng
-                    if key is not None or ranges:
-                        try:
-                            if key is not None:
-                                pruned, rep = self.point_lookup_df(
-                                    t, key, ts_range=ts_parsed)
-                            else:
-                                pruned, rep = self.multi_range_lookup_df(
-                                    t, ranges)
-                            zs = self.query_stats.setdefault(
-                                "zonemap", {"queries": 0,
-                                            "files_skipped": 0})
-                            zs["queries"] += 1
-                            zs["files_skipped"] += rep["files_skipped"]
-                            df = (
-                                pruned
-                                if pruned is not None
-                                else self.spark.createDataFrame(
-                                    [], df.schema)
-                            )
-                        except Exception:  # pragma: no cover - defensive
-                            pass
+                df = self._query_read(sql, t, tables)
             if df is None:
                 if self.catalog.get_table(t) is None:
                     raise gate.SQLGateError(f"table not found: {t}")
                 df = self.spark.createDataFrame([], self._empty_struct(t))
-            if "gen" in df.columns:  # internal layout detail, not user-visible
-                df = df.drop("gen")
-            df.createOrReplaceTempView(t)
+            # gen is an internal layout detail, not user-visible
+            df.drop("gen").createOrReplaceTempView(t)
         return self.spark.sql(sql)
 
+    def _query_read(self, sql: str, table: str, tables) -> DataFrame | None:
+        """``table``'s read for ``sql``, with zone-map file pruning on
+        the SQL path: the lookup scan when the WHERE clause provably
+        bounds the table (see gate.pruning_spec for the soundness
+        rules), else the full hybrid read. The SQL still re-applies
+        every predicate and the pruned set is a superset of the
+        matching rows by construction, so only a table no spec serves
+        builds the full read. This is the reference's
+        Redis-min/max query-path pruning (BASELINE.md: file pruning
+        −90% reads) on Spark. A pruning failure is counted and logged
+        and falls back to the full read."""
+        spec = gate.pruning_spec(
+            sql, table, tables, extra_columns=self._zonemap_cols_for(table),
+            column_types=self.catalog.schema_of(table))
+        if spec is None:
+            return self.read_table(table)
+        keys, ranges = spec
+        zs = self.query_stats.setdefault(
+            "zonemap", {"queries": 0, "files_skipped": 0, "fallbacks": 0})
+        try:
+            if keys is not None:
+                df, rep = self.point_lookup_df(
+                    table, keys, ts_range=ranges.get("timestamp"))
+            else:
+                df, rep = self.multi_range_lookup_df(table, ranges)
+        except Exception as exc:
+            zs["fallbacks"] += 1
+            logging.getLogger(__name__).warning(
+                "zone-map pruning failed for %s, falling back to a full "
+                "scan: %r", table, exc)
+            return self.read_table(table)
+        zs["queries"] += 1
+        zs["files_skipped"] += rep["files_skipped"]
+        return df
+
     def _empty_struct(self, table: str) -> T.StructType:
-        struct = self._catalog_struct(table)
-        if struct is not None:
-            return struct
+        """The full read's schema (without ``gen``) for a table with
+        nothing to read."""
+        cols = self.catalog.schema_of(table)
+        if not cols:
+            return T.StructType(
+                [
+                    T.StructField("id", T.StringType(), False),
+                    T.StructField("timestamp", T.TimestampType(), False),
+                    T.StructField("table_name", T.StringType(), False),
+                ]
+            )
         return T.StructType(
-            [
-                T.StructField("id", T.StringType(), False),
-                T.StructField("timestamp", T.TimestampType(), False),
-                T.StructField("table_name", T.StringType(), False),
-            ]
+            [T.StructField(c, _parse_type(t), True) for c, t in cols.items()]
+            + [T.StructField("dt", T.StringType(), True)]
         )
 
     def query(
@@ -2185,8 +2042,6 @@ class Engine:
         if self.catalog.get_table(table) is None:
             raise ValueError(f"no such table: {table}")
         if self.retain_history and not force:
-            import logging
-
             logging.getLogger(__name__).info(
                 "compaction of %r deferred: retain_history is set and "
                 "compacting would make old snapshots unreadable "

@@ -899,3 +899,118 @@ def extract_conjunctive_keys(
         if ok and keys:
             return keys
     return None
+
+
+_TS_LIT_RE = re.compile(
+    r"^\d{4}-\d{2}-\d{2}(?:[ T]\d{2}:\d{2}(?::\d{2}(?:\.\d{1,6})?)?)?$")
+
+
+def _parse_ts_literal(lit: str | None):
+    """A quoted SQL literal as a tz-naive datetime, or None when typed
+    timestamp semantics can't be guaranteed — the decline-on-doubt gate
+    for zone-map timestamp pruning. Rejects tz-aware forms (the engine
+    stores naive-UTC brackets under session timeZone=UTC; an offset
+    literal would need tz arithmetic the string bracket can't express).
+
+    The shape gate (_TS_LIT_RE) admits only the dashed forms whose
+    Spark string→timestamp cast provably agrees with
+    ``datetime.fromisoformat``: ``YYYY-MM-DD`` optionally followed by
+    ``[ T]HH:MM[:SS[.ffffff]]``. Python ≥3.11 fromisoformat also takes
+    compact forms Spark casts to NULL (``'20240101'``,
+    ``'2024-01-01T10'``) — those must decline HERE so the documented
+    invariant ("a declined parse only skips an optimization") holds
+    without leaning on the outer SQL's re-filter (r14 ADVICE, low)."""
+    if lit is None or not _TS_LIT_RE.match(lit):
+        return None
+    import datetime as _dt
+
+    try:
+        parsed = _dt.datetime.fromisoformat(lit)
+    except (ValueError, TypeError):
+        return None
+    return None if parsed.tzinfo is not None else parsed
+
+
+def pruning_spec(
+    sql: str, table: str, tables,
+    extra_columns: tuple[str, ...] = (),
+    column_types: dict[str, str] | None = None,
+) -> tuple[list[str] | None, dict[str, tuple]] | None:
+    """How the zone maps may prune ``table``'s scan for ``sql``:
+    ``(keys, ranges)`` — ``keys`` the id literals an ``id =`` / ``IN``
+    conjunct pins (or None), ``ranges`` ``{column: (lo, lo_incl, hi,
+    hi_incl)}`` — or None when nothing provably bounds the table.
+    With keys, ``ranges`` holds at most the timestamp window; without,
+    it holds the id range, the timestamp window and the ranges on
+    ``extra_columns`` (the table's other zone-map columns), each typed
+    as the engine's pruners compare them.
+
+    Eligibility: a single-table query must name ``table`` exactly once
+    in the literal-stripped SQL — a self-join (``FROM t a JOIN t b``)
+    references the view twice but a conjunct constrains only ONE
+    alias, so pruning the shared view would drop the other alias's
+    rows (column prefixes over-count, which only declines). A join
+    needs QUALIFIED attribution (``alias.col`` / ``table.col``; an
+    unqualified ``id`` is ambiguous across the join) and a single
+    WHERE that is provably the outer filter — see
+    :func:`extract_join_pruning_bindings` for the soundness argument
+    (covers LEFT/FULL null-extension)."""
+    qual: tuple[str, ...] | None = None
+    if len(tables) == 1:
+        if len(re.findall(rf"\b{re.escape(table)}\b",
+                          _strip_string_literals(sql))) != 1:
+            return None
+    else:
+        binds = extract_join_pruning_bindings(sql)
+        if binds is None or table not in binds:
+            return None
+        qual = binds[table]
+    keys = extract_conjunctive_keys(sql, qualifier=qual)
+    ranges: dict[str, tuple] = {}
+    # timestamp range with TYPED comparison: the quoted literal must
+    # parse as a (tz-naive) ISO timestamp, else decline — a string
+    # bracket must never be compared against a non-timestamp literal
+    # (r13 verdict #5). The window composes with BOTH key lookups
+    # ("these ids, last week") and id ranges (keyset cursor inside a
+    # window).
+    ts_rng = extract_conjunctive_range(
+        sql, column="timestamp", typed_literal_prefixes=("TIMESTAMP",),
+        qualifier=qual)
+    if ts_rng is not None:
+        lo, lo_i, hi, hi_i = ts_rng
+        plo, phi = _parse_ts_literal(lo), _parse_ts_literal(hi)
+        if (lo is None) == (plo is None) and (hi is None) == (phi is None):
+            ranges["timestamp"] = (plo, lo_i, phi, hi_i)
+    if keys is not None:
+        return keys, ranges
+    # typed prefixes here too: without them a coexisting `timestamp
+    # BETWEEN TIMESTAMP '..' AND TIMESTAMP '..'` stays unrewritten and
+    # its embedded AND makes the splitter decline the WHOLE clause,
+    # losing the provable id range (r14 ADVICE, low). _rewrite_between
+    # is extraction-only and column-agnostic, so this cannot affect id
+    # soundness.
+    id_rng = extract_conjunctive_range(
+        sql, typed_literal_prefixes=("TIMESTAMP",), qualifier=qual)
+    if id_rng is not None:
+        ranges["id"] = id_rng
+    # numeric-literal conjuncts on the table's EXTRA indexed columns
+    # (TableConfig.zonemap_columns) — the reference's numeric min/max
+    # pruning (file_pruning.go:107-255). Typed int/float bounds; the
+    # pruner admits any non-comparable bracket (TypeError ⇒ scan), so a
+    # mis-typed column only loses the optimization.
+    for zc in extra_columns:
+        if zc in ("id", "timestamp"):
+            continue
+        rng = extract_conjunctive_numeric_range(sql, column=zc, qualifier=qual)
+        if rng is None and (column_types or {}).get(zc) == "string":
+            # quoted-literal ranges on an extra column prune exactly like
+            # the id path — but ONLY when the cumulative type is string,
+            # so the SQL compares strings binarily (any non-string type
+            # would CAST the literal, and a lexicographic bracket check
+            # against e.g. '2024-1-2' on a timestamp column is an
+            # unsound skip). Generations whose physical type differs
+            # hold non-string brackets: those TypeError into a scan.
+            rng = extract_conjunctive_range(sql, column=zc, qualifier=qual)
+        if rng is not None:
+            ranges[zc] = rng
+    return (None, ranges) if ranges else None

@@ -273,9 +273,11 @@ def q8_market_share(spark, sf_dir):
     # 9-rep A/B, one session, sf0.1: med 0.892 → 0.891, min 0.766 →
     # 0.774 — the broadcast chains were off the critical path at this
     # size); the change is the scale posture + the removed forced
-    # broadcasts. Rows identical (inner-join conjunction reorder — the
-    # ASIA restriction lands at the region probe, pipelined in the
-    # same stage).
+    # broadcasts of the supplier/customer subtrees. The type-filtered
+    # part slice (1/6 of part, SF-growing) still carries a forced
+    # F.broadcast hint. Rows identical (inner-join conjunction reorder
+    # — the ASIA restriction lands at the region probe, pipelined in
+    # the same stage).
     r = load(spark, sf_dir, "region").filter(
         F.col("r_name") == "ASIA").select("r_regionkey")
     n2 = load(spark, sf_dir, "nation").select("n_nationkey", "n_regionkey")
@@ -745,8 +747,8 @@ def q22_idle_high_balance(spark, sf_dir):
         "nation/region probes applying the EUROPE restriction; the "
         "double equality against the window min is "
         "exact because the min is an element of the compared set. The "
-        "final part join is unhinted — AQE broadcasts the type-filtered "
-        "slice while it fits",
+        "type-filtered part key set is hint-broadcast into the fact "
+        "chain before the aggregate",
 )
 def q2_min_cost_supplier(spark, sf_dir):
     # r18 rework (guide §3.2/§2.4): the EUROPE supplier dim used to be

@@ -225,6 +225,28 @@ def test_sql_path_prunes_on_conjunctive_id_eq(engine):
     assert full == out
 
 
+def test_sql_path_pruning_failure_falls_back_loudly(engine, monkeypatch,
+                                                    caplog):
+    """A zone-map failure on the SQL path falls back to the full read
+    — same answer — and is counted and logged, never swallowed."""
+    _seed(engine, "zqf", n=8, days=4)
+    sql = "SELECT id, v FROM zqf WHERE id = 'r005'"
+    want = json.loads(engine.query(sql))
+    assert want == [{"id": "r005", "v": 5}]
+    before = engine.query_stats["zonemap"]["fallbacks"]
+
+    def broken(*args, **kwargs):
+        raise OSError("sidecar unreadable")
+
+    monkeypatch.setattr(engine.zonemaps, "prune", broken)
+    with caplog.at_level("WARNING", logger="miniodb_spark.engine"):
+        got = json.loads(engine.query(sql + " AND v >= 0"))
+    assert got == want
+    assert engine.query_stats["zonemap"]["fallbacks"] == before + 1
+    assert any("zqf" in r.getMessage() and "sidecar unreadable"
+               in r.getMessage() for r in caplog.records)
+
+
 def test_sql_path_does_not_prune_disjunctions(engine):
     _seed(engine, "zqo", n=8, days=4)
     out = json.loads(engine.query(
@@ -974,7 +996,7 @@ def test_parse_ts_literal_and_typed_prefix_unit():
     agree)."""
     import datetime as dt
 
-    from miniodb_spark.engine import _parse_ts_literal
+    from miniodb_spark.gate import _parse_ts_literal
     from miniodb_spark.gate import extract_conjunctive_range
     from miniodb_spark.zonemap import _jsonable
 
@@ -1311,6 +1333,21 @@ def test_numeric_zonemap_pruning_sql_path(engine):
     out4 = _json.loads(engine.query(
         "SELECT id FROM znum WHERE v > 150 ORDER BY id"))
     assert len(out4) == 11 and out4[-1]["id"] == "r2000"
+
+
+def test_pruned_view_keeps_buffer_only_columns(engine):
+    """A buffer lacking the pruned column holds no match, yet its own
+    columns stay in the view: with every file pruned away the query
+    still resolves a column only the buffer has."""
+    import json as _json
+
+    _seed_numeric(engine, "zbo")
+    engine.write("zbo", {"note": "x"}, record_id="n1", timestamp_us=T0)
+    assert _json.loads(engine.query(
+        "SELECT id, note FROM zbo WHERE v > 5000")) == []
+    assert _json.loads(engine.query(
+        "SELECT id, note FROM zbo WHERE note = 'x'")) == [
+            {"id": "n1", "note": "x"}]
 
 
 def test_numeric_equality_pruning_sql_path(engine):
